@@ -72,18 +72,15 @@ object Main {
       ((System.nanoTime() - t0) / 1e9, out)
     }
 
-    // warm-up: a fixed three passes, so every run starts timing at about
-    // the same point of the JIT's progress however busy the machine is;
-    // then on until the last three agree within 10%, up to `--seconds`
+    // warm-up: a fixed count of passes per workload, so every run starts
+    // timing at the same point of the JIT's progress however busy the
+    // machine is
     val warm = ArrayBuffer.empty[Double]
-    val warmStart = System.nanoTime()
-    def levelled = { val l = warm.takeRight(3); l.max <= 1.1 * l.min }
-    while (warm.size < 3 || (!levelled && (System.nanoTime() - warmStart) / 1e9 < o.seconds))
-      warm += timed(off)._1
+    while (warm.size < wl.warmPasses) warm += timed(off)._1
 
     val passes = ArrayBuffer.empty[(Double, PassOut)]
     val start = System.nanoTime()
-    while (passes.size < 4 || (System.nanoTime() - start) / 1e9 < o.seconds)
+    while (passes.size < 5 || (System.nanoTime() - start) / 1e9 < o.seconds)
       passes += timed(off)
     val rss = peakRssMb()
     val outBytes = wl.outputBytes().toDouble

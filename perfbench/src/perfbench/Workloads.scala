@@ -26,6 +26,9 @@ final case class PassOut(ops: Long, items: Long, batchLatenciesS: Seq[Double])
   * outputs; `check` verifies the outputs of the last pass. */
 abstract class Workload(val spark: SparkSession, val seed: Long, work: File) {
   def name: String
+  /** Untimed passes before timing starts: enough for the pass time to
+    * reach its plateau (the JIT keeps speeding passes up until then). */
+  def warmPasses: Int
   def setup(): Unit
   def pass(t: Tracer): PassOut
   def check(): Seq[String]
@@ -113,6 +116,7 @@ final class RasterIngest(spark0: SparkSession, seed0: Long, work: File)
   import spark.implicits._
 
   val name = "raster_ingest"
+  val warmPasses = 7
   val Granules = 12
   val Spec = Gen.GridSpec(1440, 720)
   val Collection = "grid-bench"
@@ -265,6 +269,7 @@ final class CatalogIngest(spark0: SparkSession, seed0: Long, work: File)
   import spark.implicits._
 
   val name = "catalog_ingest"
+  val warmPasses = 7
   val Events = 200000L
   private val eventsDir = dir("inputs/catalog/events.parquet")
   private val metaDir = dir("inputs/catalog/meta.parquet")
@@ -323,6 +328,7 @@ final class StreamIngest(spark0: SparkSession, seed0: Long, work: File)
   import spark.implicits._
 
   val name = "stream_ingest"
+  val warmPasses = 5
   val Files_ = 4
   val PerFile = 2000L
   val MaxFilesPerTrigger = 1
