@@ -118,13 +118,17 @@ object ItemId {
   def derive(filename: String, idRegex: Option[String]): Option[String] =
     idRegex match {
       case None => Some(stem(filename))
-      case Some(rx) =>
-        val ms = rx.r.findAllMatchIn(filename).toSeq
-        if (ms.size != 1) None
-        else {
-          val m = ms.head
-          val groups = (1 to m.groupCount).map(m.group)
-          Some(if (groups.nonEmpty) groups.mkString("-") else m.matched)
-        }
+      case Some(rx) => byRegex(filename, rx.r)
     }
+
+  /** The `idRegex` branch of [[derive]] over an already-compiled pattern. */
+  def byRegex(filename: String, rx: Regex): Option[String] = {
+    val ms = rx.findAllMatchIn(filename).toSeq
+    if (ms.size != 1) None
+    else {
+      val m = ms.head
+      val groups = (1 to m.groupCount).map(m.group)
+      Some(if (groups.nonEmpty) groups.mkString("-") else m.matched)
+    }
+  }
 }

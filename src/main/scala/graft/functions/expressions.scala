@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -74,14 +76,23 @@ case class DeriveItemId(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "derive_item_id"
 
+  // the last id_regex seen and its compiled pattern, as one immutable
+  // pair (a racing reader sees the old pair or the new one, never a mix).
+  // Transient: each task's deserialized expression compiles its own.
+  @transient private[this] var compiled: (String, Regex) = _
+
   override def eval(input: InternalRow): Any = {
     val fn = left.eval(input)
     if (fn == null) return null
-    val rx = right.eval(input) match {
-      case null => None
-      case s => Some(s.toString)
+    val id = right.eval(input) match {
+      case null => Some(ItemId.stem(fn.toString))
+      case s =>
+        val rx = s.toString
+        var c = compiled
+        if (c == null || c._1 != rx) { c = (rx, rx.r); compiled = c }
+        ItemId.byRegex(fn.toString, c._2)
     }
-    ItemId.derive(fn.toString, rx).map(UTF8String.fromString).orNull
+    id.map(UTF8String.fromString).orNull
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =

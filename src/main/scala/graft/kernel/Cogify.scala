@@ -3,7 +3,12 @@ package graft.kernel
 import java.io.ByteArrayOutputStream
 import java.util.zip.{Deflater, Inflater}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Dataset
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.sinks.OutputFs
 
 import Raster._
 
@@ -278,7 +283,7 @@ object Cogify {
     * fixups apply to every band (they correct the grid orientation of
     * the shared container). */
   def cogifyOne(task: CogifyTask, config: CollectionConfig, reader: GridReader,
-      outDir: String): CogifyResult = {
+      outDir: String, conf: Configuration): CogifyResult = {
     val (raw, xs, ys) = reader.readBands(task, config)
     var bands = raw
     if (config.transposeFix) bands = bands.map(transpose) // handler.py:90-91
@@ -303,9 +308,13 @@ object Cogify {
     // (dims are shared, so per-band tile counts are equal)
     val tilesPerBand = ((grid.width + TileSize - 1) / TileSize) *
       ((grid.height + TileSize - 1) / TileSize)
-    val payload =
-      if (bands.size == 1) writeTiff(outPath, grid, affine, tile(grid), epsg)
-      else writeTiffBands(outPath, bands, affine, epsg)
+    // the reference's GTiff/deflate profile + `cog_translate` overviews
+    // (handler.py:25-29): IFD-first layout with a 2×-decimated overview
+    // pyramid, multi-band as `PlanarConfiguration=2` planes decimated in
+    // lockstep — see [[Tiff]]
+    val payload = writeBytes(outPath, conf,
+      if (bands.size == 1) Tiff.writeCog(grid, affine, tile(grid), Some(epsg))
+      else Tiff.writeCogBands(bands, affine, Some(epsg)))
     CogifyResult(task.collection, task.href, task.granule_id, outPath,
       grid.width, grid.height, bands.size,
       bands.size * tilesPerBand, payload,
@@ -337,25 +346,12 @@ object Cogify {
     agg.finish(agg.reduce(agg.zero, g.data))
   }
 
-  /** Write the grid as a cloud-optimized GeoTIFF (the reference's
-    * GTiff/deflate profile + `cog_translate` overviews, handler.py:25-29)
-    * — IFD-first layout with a 2×-decimated overview pyramid; see
-    * [[Tiff]]. */
-  def writeTiff(path: String, g: Grid, affine: Affine, tiles: Seq[Tile],
-      epsg: Int = 4326): Long =
-    writeBytes(path, Tiff.writeCog(g, affine, tiles, Some(epsg)))
-
-  /** Multi-band variant: one COG, `PlanarConfiguration=2` planes, the
-    * overview pyramid decimated in lockstep (see [[Tiff.writeCogBands]]).
-    */
-  def writeTiffBands(path: String, bands: Seq[Grid], affine: Affine,
-      epsg: Int = 4326): Long =
-    writeBytes(path, Tiff.writeCogBands(bands, affine, Some(epsg)))
-
-  private def writeBytes(path: String, bytes: Array[Byte]): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val out = fs.create(p, true)
+  /** Write one COG through [[graft.sinks.OutputFs]] under the caller's
+    * (the session's) Hadoop configuration. */
+  private def writeBytes(path: String, conf: Configuration,
+      bytes: Array[Byte]): Long = {
+    val p = new Path(path)
+    val out = OutputFs.get(p, conf).create(p, true)
     try out.write(bytes) finally out.close()
     bytes.length.toLong
   }
@@ -370,6 +366,7 @@ object Cogify {
     val spark = tasks.sparkSession
     import spark.implicits._
     val bcConfigs = spark.sparkContext.broadcast(configs)
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     tasks.mapPartitions { it =>
       val reader = mkReader()
       it.map { task =>
@@ -378,7 +375,7 @@ object Cogify {
         var result: CogifyResult = null
         while (result == null) {
           attempt += 1
-          try result = cogifyOne(task, config, reader, outDir)
+          try result = cogifyOne(task, config, reader, outDir, conf.value)
           catch {
             case e: java.io.IOException if attempt < maxAttempts => // retryable
             case e: Throwable =>

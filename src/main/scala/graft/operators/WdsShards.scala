@@ -89,15 +89,16 @@ object WdsShards {
   }
 
   /** Write shard rows as real files under `dir` (the on-disk layout a
-    * data loader mounts); one file per row via the Hadoop FS API. */
+    * data loader mounts); one file per row via the Hadoop FS API
+    * ([[graft.sinks.OutputFs]]). */
   def writeShardFiles(shards: DataFrame, dir: String): Unit = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       shards.sparkSession.sparkContext.hadoopConfiguration)
     shards.select(col("path"), col("tar"))
       .repartition(col("path"))
       .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        val fs = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(conf.value)
+        val fs = graft.sinks.OutputFs.get(new org.apache.hadoop.fs.Path(dir),
+          conf.value)
         it.foreach { r =>
           val out = fs.create(
             new org.apache.hadoop.fs.Path(dir, r.getString(0)), true)

@@ -27,8 +27,13 @@ object Ingest {
       // for the side-effecting stages; None = inherit source partitioning
       parallelism: Option[Int] = None)
 
+  /** Dead-letter reason of an item [[buildItems]] flagged `valid = false`. */
+  val UndatedReason: String =
+    "undated: no datetime from the catalog, the filename or datetime_range"
+
   /** Discovered assets → published items. Returns (published items,
-    * publish dead-letters). */
+    * dead letters as (item, error)): the publish failures, plus the
+    * items without a datetime, which are neither spilled nor posted. */
   def run(assets: DataFrame, cfg: IngestConfig,
       makePoster: () => PublishSink.ItemPoster,
       cmrMeta: Option[DataFrame] = None): (DataFrame, DataFrame) = {
@@ -36,10 +41,13 @@ object Ingest {
     val transferred = Transfer.execute(fanned, cfg.targetRoot)
 
     val items = buildItems(transferred, cmrMeta)
-    val routed = SpillSink.route(items, "item_json", cfg.spillDir, cfg.spillThreshold)
+    val routed = SpillSink.route(items.filter(col("valid")), "item_json",
+      cfg.spillDir, cfg.spillThreshold)
     val resolved = SpillSink.resolve(routed)
-    val dlq = PublishSink.publish(resolved, "resolved_item", makePoster)
-    (resolved, dlq)
+    val failed = PublishSink.publish(resolved, "resolved_item", makePoster)
+    val undated = items.filter(!col("valid"))
+      .select(col("item_json").as("item"), lit(UndatedReason).as("error"))
+    (resolved, failed.unionByName(undated))
   }
 
   /** The build-stac enrichment with event-union dispatch (A11,

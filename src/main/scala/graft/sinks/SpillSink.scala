@@ -17,6 +17,9 @@ import org.apache.spark.util.SerializableConfiguration
   * sha-256 of the payload rather than `uuid4` (handler.py:51) — content
   * addressing makes retried tasks idempotent (a re-executed Spark task
   * rewrites the same object instead of orphaning a new one).
+  *
+  * Spill files are created through [[OutputFs]], so a local or mounted
+  * (`file:`) spill directory costs no `chmod` process per file.
   */
 object SpillSink {
 
@@ -35,8 +38,7 @@ object SpillSink {
       val name = java.security.MessageDigest.getInstance("SHA-256")
         .digest(bytes).map("%02x".format(_)).mkString + ".json"
       val p = new Path(s"$dir/$name")
-      val fs = p.getFileSystem(conf.value)
-      val out = fs.create(p, true)
+      val out = OutputFs.get(p, conf.value).create(p, true)
       try out.write(bytes) finally out.close()
       s"$dir/$name"
     }

@@ -15,7 +15,9 @@ import org.apache.spark.util.SerializableConfiguration
   * becomes a **left-anti join** against a one-shot listing of the target
   * (set-difference semantics — one listing instead of N HEAD requests),
   * and the copies run distributed in `foreachPartition`. Idempotence is
-  * structural: a re-run's anti-join finds nothing to copy.
+  * structural: a re-run's anti-join finds nothing to copy. Destinations
+  * are written through [[OutputFs]], so a local target costs no `chmod`
+  * process per copied file.
   */
 object Transfer {
 
@@ -75,7 +77,7 @@ object Transfer {
           val srcConf = graft.sources.SourceConf.resolve(conf.value, overlays, r.getString(0))
           val dstConf = graft.sources.SourceConf.resolve(conf.value, overlays, r.getString(1))
           val sfs = src.getFileSystem(srcConf)
-          val dfs = dst.getFileSystem(dstConf)
+          val dfs = OutputFs.get(dst, dstConf)
           FileUtil.copy(sfs, src, dfs, dst, false, true, dstConf)
         }
       }

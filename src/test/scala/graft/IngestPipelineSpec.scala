@@ -197,4 +197,27 @@ class IngestPipelineSpec extends SparkSuite {
     assert(!row.getAs[Boolean]("valid"))
     assert(row.getAs[String]("item_id") == "undated")
   }
+
+  test("batch ingest dead-letters an undated record instead of publishing it") {
+    import spark.implicits._
+    val c = cfg()
+    val assets = Seq(
+      ("no2", "file:/x/no2/undated.tif", false, null: String, null: String),
+      ("no2", "file:/x/no2/OMI_20160101.tif", false, null: String, null: String))
+      .toDF("collection", "s3_filename", "upload", "datetime_range", "id_regex")
+      .withColumn("granule_id", lit(null).cast("string"))
+    val dryDir = c.dryRunDir
+    val (published, dlq) = Ingest.run(assets, c,
+      () => new PublishSink.DryRunPoster(dryDir))
+
+    val dead = dlq.collect()
+    assert(dead.length == 1)
+    assert(dead.head.getAs[String]("item").contains(""""item_id":"undated""""))
+    assert(dead.head.getAs[String]("error") == Ingest.UndatedReason)
+    assert(published.select("item_id").as[String].collect().toSeq == Seq("OMI_20160101"))
+    val recorded = new java.io.File(dryDir).listFiles()
+      .flatMap(f => scala.io.Source.fromFile(f).getLines()).toSeq
+    assert(recorded.length == 1)
+    assert(recorded.head.contains(""""item_id":"OMI_20160101""""))
+  }
 }

@@ -90,6 +90,28 @@ class KernelSpec extends SparkSuite {
     assert(dlq.forall(_.error.exists(_.contains("corrupt granule"))))
   }
 
+  test("cogify writes honour the session's Hadoop configuration (umask)") {
+    import spark.implicits._
+    val out = tempDir("cogconf").getAbsolutePath
+    val hc = spark.sparkContext.hadoopConfiguration
+    val planted = Seq("fs.file.impl.disable.cache" -> "true",
+      "fs.permissions.umask-mode" -> "077")
+    val prior = planted.map { case (k, _) => k -> Option(hc.get(k)) }
+    planted.foreach { case (k, v) => hc.set(k, v) }
+    val results =
+      try Cogify.run(Seq(CogifyTask("OMDOAO3e", "s3://b/u.nc", None,
+        upload = false)).toDS(), Map.empty, s"file:$out").collect()
+      finally prior.foreach {
+        case (k, Some(v)) => hc.set(k, v)
+        case (k, None) => hc.unset(k)
+      }
+    assert(results.length == 1 && results.head.error.isEmpty)
+    val mode = java.nio.file.attribute.PosixFilePermissions.toString(
+      java.nio.file.Files.getPosixFilePermissions(
+        java.nio.file.Paths.get(out, "OMDOAO3e", "u.nc.cog.tif")))
+    assert(mode == "rw-------")
+  }
+
   test("cogify output is a spec-layout baseline TIFF that round-trips") {
     import graft.kernel.Tiff
     // non-tile-aligned dims exercise edge padding; non-global extent

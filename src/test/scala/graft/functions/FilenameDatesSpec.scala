@@ -120,6 +120,23 @@ class FilenameDatesSpec extends AnyFunSuite {
     assert(ItemId.derive("s3://b/p/.hidden", None).contains(".hidden"))
   }
 
+  test("derive_item_id: one expression instance follows a changing id_regex") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val e = DeriveItemId(BoundReference(0, StringType, nullable = true),
+      BoundReference(1, StringType, nullable = true))
+    val fn = "s3://OMNO2d_HRM/OMI_trno20.10x0.10_201601_Col3_V4.nc.tif"
+    val rows = Seq(Some("s3://([^/]*)/(.+).tif$"), Some("_(\\d{6})_"), None,
+      Some("s3://([^/]*)/(.+).tif$"), Some("nomatch"), Some("_(\\d{6})_"))
+    rows.foreach { rx =>
+      val got = Option(e.eval(InternalRow(UTF8String.fromString(fn),
+        rx.map(UTF8String.fromString).orNull))).map(_.toString)
+      assert(got == ItemId.derive(fn, rx), s"id_regex $rx")
+    }
+  }
+
   test("item id regex matching != once → None (reference assert)") {
     assert(ItemId.derive("nomatch", Some("s3://([^/]*)/(.+).tif$")).isEmpty)
   }
