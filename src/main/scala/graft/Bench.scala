@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main + the contention-aware sweep engine it runs.
   *
@@ -43,7 +42,6 @@ object Bench {
     * @param queries    (name, run) pairs; `run` executes one full pass
     * @param probePass  times one fixed CPU-bound probe, in seconds
     * @param clearCache post-pass teardown, run OUTSIDE the stopwatch
-    * @param prior      previous round's recorded per-query mins
     * @param probeEvery probe cadence in queries (also probed at both ends)
     * @param hotRatio   a probe is hot when > hotRatio × the sweep's min probe
     * @param passes     timed passes per query; the min is recorded (single
@@ -53,7 +51,6 @@ object Bench {
   def sweep(queries: Seq[(String, () => Unit)],
       probePass: () => Double,
       clearCache: () => Unit,
-      prior: Map[String, Double] = Map.empty,
       probeEvery: Int = 15,
       hotRatio: Double = 1.5,
       passes: Int = 3): SweepResult = {
@@ -114,9 +111,8 @@ object Bench {
     val retimed = scala.collection.mutable.ArrayBuffer[String]()
     val suspect = scala.collection.mutable.ArrayBuffer[String]()
     val finalTimings = results.map { case (name, run, idx, best) =>
-      val regressedVsPrior = prior.get(name).exists(p => best > 3 * p && best > 0.3)
       val hot = spanHot(idx)
-      if (!hot && best <= 1.5 && !regressedVsPrior) name -> best
+      if (!hot && best <= 1.5) name -> best
       else {
         // end-of-sweep re-time on a (hopefully) quiet box; a throwing
         // re-check keeps the earlier valid min
@@ -138,15 +134,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     // warm the JVM/codegen/parquet paths so the first timed query doesn't
     // absorb ~4 s of session initialization
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -184,7 +173,7 @@ object Bench {
     // and is REPORTED, not used for hot-span attribution: the
     // single-thread probe remains the stable attribution clock, the
     // canary is the box-comparability verdict a reader checks FIRST.
-    val mcThreads = cpus.toInt
+    val mcThreads = cpus
     val mcBlackhole = new java.util.concurrent.atomic.AtomicLong()
     def mcPass(): Double = {
       val t0 = System.nanoTime()
@@ -209,33 +198,12 @@ object Bench {
       probePass()
     }
 
-    // previous round's recorded mins: a query over 3× its prior min gets
-    // re-timed even on a quiet-looking box (round 6's 1.46 s contention
-    // hits slipped under the absolute bar)
-    val prior: Map[String, Double] = {
-      val benchFiles = Option(new java.io.File(".").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      benchFiles.sortBy(_.getName.replaceAll("\\D", "").toInt).lastOption
-        .map { f =>
-          val src = scala.io.Source.fromFile(f)
-          val text = try src.mkString finally src.close()
-          val start = text.indexOf("\"queries\":{")
-          val end = if (start < 0) -1 else text.indexOf("}", start)
-          if (start < 0 || end < 0) Map.empty[String, Double]
-          else "\"([A-Za-z0-9_]+)\":([0-9][0-9.eE+-]*)".r
-            .findAllMatchIn(text.substring(start + 11, end))
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }.getOrElse(Map.empty)
-    }
-
     val res = sweep(
       SparkEntry.queries.toSeq.map { case (name, fn) =>
         name -> (() => { fn(spark, sfDir).count(); () })
       },
       probeWithCanary _,
-      () => spark.catalog.clearCache(),
-      prior)
+      () => spark.catalog.clearCache())
 
     // 3-decimal formatting: the driver records only a bounded tail of
     // stdout, and 75 queries at full double precision overflowed it in

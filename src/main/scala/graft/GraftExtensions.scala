@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** SparkSessionExtensions entry point: registers the engine's custom
-  * expressions as SQL functions at session build time —
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * expressions as SQL functions, and its optimizer rule and planner
+  * strategy, at session build time. [[Session.local]] installs it through
   * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -4,27 +4,25 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) — read as long, normalized
-      // back to µs timestamps in graft.Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+
+  /** Dump `names` (every registered query when empty) under `outDir`:
+    * one parquet directory per query, `oracle_sql.json` restricted to
+    * the dumped names, `gates.json` and `_failed.json`. Returns the
+    * failures (name → message); the session stays open. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      names: Seq[String] = Nil): Map[String, String] = {
+    val queries = SparkEntry.queries
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val selected = if (names.isEmpty) queries.keys.toSeq else names
     new java.io.File(outDir).mkdirs()
     // A query that throws must be IMPOSSIBLE to miss: round 9's three
     // analysis failures produced no dump, so the driver emitted no
     // correctness row at all and the breakage was invisible in every
     // artifact. Collect failures into a manifest written next to the dumps.
     val failed = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    selected.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -36,12 +34,26 @@ object Verify {
       spark.catalog.clearCache()
     }
     def q(s: String): String = JsonUtil.quote(s)
-    val json = SparkEntry.oracleSql
+    val keep = selected.toSet
+    val json = SparkEntry.oracleSql.filter { case (k, _) => keep(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // per-query gate provenance (oracle vs named golden/spec gates) —
     // the machine-checkable form of COVERAGE.md's correctness story
     Files.writeString(Paths.get(s"$outDir/gates.json"), SparkEntry.gatesJson)
+    // Always write the manifest (empty {} on a clean run) so its absence
+    // vs emptiness is never ambiguous.
+    val failedJson = failed
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/_failed.json"), failedJson)
+    failed.toMap
+  }
+
+  /** usage: Verify <sfDir> <outDir> [name…] */
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [name...]")
+    val spark = Session.local(Session.cpus)
+    val failed = dump(spark, args(0), args(1), args.drop(2).toSeq)
     // Self-heal the committed copy too (r12: a query registered without
     // rerunning WriteGates left gates.json stale and GatesSpec red at
     // HEAD). Verify runs every round and the driver commits the working
@@ -68,12 +80,8 @@ object Verify {
           "regenerated and committed.")
       }
     }
-    // Always write the manifest (empty {} on a clean run) so its absence
-    // vs emptiness is never ambiguous. Exit code stays 0 — a nonzero exit
-    // could make the driver discard the healthy queries' dumps too.
-    val failedJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_failed.json"), failedJson)
+    // Exit code stays 0 — a nonzero exit could make the driver discard
+    // the healthy queries' dumps too.
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} queries FAILED: ${failed.keys.mkString(", ")}")
     }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Column-level surface of the engine's custom scalar functions, plus SQL
@@ -199,14 +199,4 @@ object GraftFunctions {
 
   private def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     ColumnBridge.expression(c)
-
-  /** Register the custom expressions for SQL use. */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "extract_filename_dates", es => ExtractFilenameDates(es.head, es(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "derive_item_id", es => DeriveItemId(es.head, es(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", es => SimHash64(es.head), "built-in")
-  }
 }

@@ -21,11 +21,7 @@ object Ingest {
       targetRoot: String, // transfer destination (A10)
       spillDir: String, // oversized-item side storage (A17)
       dryRunDir: String, // publish sink dry-run capture (A19)
-      spillThreshold: Int = SpillSink.DefaultThreshold,
-      // B3: the reference's Map max_concurrency=100
-      // (step_function_stack.py:87,95,140,182) — explicit task fan-out
-      // for the side-effecting stages; None = inherit source partitioning
-      parallelism: Option[Int] = None)
+      spillThreshold: Int = SpillSink.DefaultThreshold)
 
   /** Dead-letter reason of an item [[buildItems]] flagged `valid = false`. */
   val UndatedReason: String =
@@ -37,8 +33,7 @@ object Ingest {
   def run(assets: DataFrame, cfg: IngestConfig,
       makePoster: () => PublishSink.ItemPoster,
       cmrMeta: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val fanned = cfg.parallelism.fold(assets)(assets.repartition)
-    val transferred = Transfer.execute(fanned, cfg.targetRoot)
+    val transferred = Transfer.execute(assets, cfg.targetRoot)
 
     val items = buildItems(transferred, cmrMeta)
     val routed = SpillSink.route(items.filter(col("valid")), "item_json",

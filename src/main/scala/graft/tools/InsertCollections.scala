@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Collection upsert driver (reference A21,
@@ -19,12 +18,7 @@ object InsertCollections {
     val (jsonDir, catalogDir) = (args(0), args(1))
     val pattern = if (args.length > 2) args(2) else ""
 
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
 
     val incoming = graft.model.StacCollection.load(spark, jsonDir)
       .filter(col("id").startsWith(pattern))

@@ -2,8 +2,6 @@ package graft.tools
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.Ingest
 import graft.sinks.PublishSink
 import graft.sources.Discovery
@@ -50,12 +48,7 @@ object InsertItems {
     val (inputDir, workDir) = (args(0), args(1))
     val pattern = if (args.length > 2) args(2) else ""
 
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
 
     val files = new java.io.File(inputDir).listFiles()
       .filter(f => f.getName.endsWith(".json") && f.getName.startsWith(pattern))

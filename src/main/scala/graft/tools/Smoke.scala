@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Manual smoke entry point (the reference keeps one per handler,
   * e.g. s3-discovery/handler.py:68-78): drives the flagship entry()
   * and the SQL-registered custom expressions with happy-path and
@@ -9,17 +7,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // fail loudly if any custom expression's generated code doesn't
-      // compile (default is a silent interpreted fallback)
-      .config("spark.sql.codegen.fallback", "false")
-      .getOrCreate()
-    // injected by GraftExtensions (no registerAll yet)
+    val spark = graft.Session.local(graft.Session.cpus)
+    // injected by GraftExtensions
     println("extensions: " + spark.sql(
       "SELECT cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
         "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)))").head().getDouble(0))
@@ -41,7 +30,6 @@ object Smoke {
     println(s"entry() rows=${e.count()}")
     e.show(false)
 
-    graft.functions.GraftFunctions.registerAll(spark)
     spark.sql("""SELECT f, extract_filename_dates(f, r) AS d, derive_item_id(f, rx) AS id
       FROM VALUES
         ('s3://b/x_20200214.tif', 'month', 's3://([^/]*)/(.+)\\.tif$'),

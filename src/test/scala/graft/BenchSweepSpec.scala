@@ -98,16 +98,4 @@ class BenchSweepSpec extends AnyFunSuite {
     assert(res.failed.keySet == Set("boom"))
     assert(res.failed("boom").contains("synthetic failure"))
   }
-
-  test("a prior-round 3x regression is re-timed even on a quiet box") {
-    val box = new Box
-    // q00 sleeps 400 ms (> 0.3 s floor and > 3× its prior 0.05 s)
-    val qs = Seq(
-      "q00" -> (() => Thread.sleep(400)),
-      "q01" -> box.query("q01"))
-    val res = Bench.sweep(qs, () => box.probe(), () => (),
-      prior = Map("q00" -> 0.05), probeEvery = 4)
-    assert(res.retimed == Seq("q00"))
-    assert(!res.contended && res.suspect.isEmpty)
-  }
 }

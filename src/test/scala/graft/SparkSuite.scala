@@ -4,22 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for specs (one per suite). */
+/** Shared local SparkSession for specs (one per JVM, the mains' recipe). */
 trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // hard-fail on custom-expression codegen errors instead of the
-    // silent interpreted fallback
-    .config("spark.sql.codegen.fallback", "false")
-    // static conf: must be set at build time (bucketed-table specs)
-    .config("spark.sql.warehouse.dir",
-      s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   def sf0001 = "/root/testdata/sf0.001"
 
