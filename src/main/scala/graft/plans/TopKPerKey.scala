@@ -102,14 +102,13 @@ object TopKPerKey {
   /** The first `k` rows per `keys` group under `order` — `(column,
     * descending?)` pairs, resolved by name against the frame's analyzed
     * output (Column objects carry lazily-resolved nodes in Spark 4 that
-    * a custom logical operator cannot take through analysis). Registers
-    * [[TopKStrategy]] with the session on first use. */
+    * a custom logical operator cannot take through analysis). Planning
+    * the result needs [[TopKStrategy]], which `graft.GraftExtensions`
+    * injects into every session built by `graft.Session.local`; a session
+    * without the extension cannot plan the node. */
   def topKPerKey(df: DataFrame, keys: Seq[String],
       order: Seq[(String, Boolean)], k: Int): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output.find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(

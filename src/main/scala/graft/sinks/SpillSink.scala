@@ -35,19 +35,26 @@ object SpillSink {
 
     val spillUdf = udf { (json: String) =>
       val bytes = json.getBytes(StandardCharsets.UTF_8)
-      val name = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(bytes).map("%02x".format(_)).mkString + ".json"
+      val name = java.util.HexFormat.of().formatHex(
+        java.security.MessageDigest.getInstance("SHA-256").digest(bytes)) + ".json"
       val p = new Path(s"$dir/$name")
       val out = OutputFs.get(p, conf.value).create(p, true)
       try out.write(bytes) finally out.close()
       s"$dir/$name"
     }
 
+    // the threshold counts characters, like the reference's len(json);
+    // characters never outnumber UTF-8 bytes, so the O(1) byte length
+    // settles every payload shorter than `threshold` bytes and only the
+    // rest pay the O(n) character count. The test is one column: written
+    // into both branches, subexpression elimination would hoist the
+    // character count out of the short circuit and run it on every row.
+    val json = col(jsonCol)
     items
-      .withColumn("stac_item",
-        when(length(col(jsonCol)) < threshold, col(jsonCol)))
-      .withColumn("stac_file_url",
-        when(length(col(jsonCol)) >= threshold, spillUdf(col(jsonCol))))
+      .withColumn("__inline", octet_length(json) < threshold || length(json) < threshold)
+      .withColumn("stac_item", when(col("__inline"), json))
+      .withColumn("stac_file_url", when(!col("__inline"), spillUdf(json)))
+      .drop("__inline")
   }
 
   /** Pointer dereference (A18): inline item wins, else fetch the spilled

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.pipeline.Ingest
 import graft.pipeline.Ingest.IngestConfig
-import graft.sinks.PublishSink
+import graft.sinks.{PublishSink, SpillSink}
 import graft.sources.Discovery
 import graft.sources.Discovery.DiscoveryRequest
 
@@ -112,6 +112,66 @@ class IngestPipelineSpec extends SparkSuite {
       .find(r => r.getAs[String]("granule_id") == "G-123").get
     assert(fallback.getAs[String]("item_json").contains("2017-02-02"))
     assert(fallback.getAs[String]("item_id") == "G-123") // id rule still holds
+  }
+
+  test("the STAC build stays in whole-stage codegen, and codegen equals interpreted eval") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import graft.functions.{DeriveItemId, ExtractFilenameDates}
+    // regex events (ISO, 8/6/4-digit, several dates, invalid, undated,
+    // multi-byte), CMR events with and without catalog metadata, and every
+    // datetime_range / id_regex shape
+    val N: String = null
+    val events = Seq(
+      ("no2", "file:/x/a_2016-01-02.tif", N, "month", N),
+      ("no2", "file:/x/b_20160304.tif", N, "year", N),
+      ("no2", "file:/x/c_201605.tif", N, N, "/x/(c)_(\\d+)"),
+      ("no2", "file:/x/d_2016_2017.tif", N, "week", N),
+      ("no2", "file:/x/e_20160230.tif", N, N, N),
+      ("no2", "file:/x/undated.tif", N, "month", "nomatch"),
+      ("no2", "file:/日本/ü_1999.tif", N, "week", N),
+      ("no2", "file:/x/f_20180101.tif", "G-1", N, N),
+      ("no2", "file:/x/g_20180101.tif", "G-2", "month", "(g)"))
+      .toDF("collection", "s3_filename", "granule_id", "datetime_range", "id_regex")
+    val meta = Seq(("G-1", java.sql.Timestamp.valueOf("2020-05-06 07:08:09")))
+      .toDF("granule_id", "time_start")
+    def build() = Ingest.buildItems(events, Some(meta))
+      .select("item_id", "item_json", "dts", "valid")
+
+    val spill = tempDir("cgspill").getAbsolutePath
+    val q = SpillSink.resolve(SpillSink.route(
+      Ingest.buildItems(events, Some(meta)).filter(col("valid")), "item_json",
+      s"file:$spill", threshold = 120))
+    assert(q.collect().length == 6)
+    // (node, inside a generated stage?) over the final adaptive plan
+    def walk(p: SparkPlan, inStage: Boolean): Seq[(SparkPlan, Boolean)] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, inStage)
+      case s: QueryStageExec => walk(s.plan, inStage)
+      case w: WholeStageCodegenExec => walk(w.child, inStage = true)
+      case i: InputAdapter => walk(i.child, inStage = false)
+      case other => (other, inStage) +: other.children.flatMap(walk(_, inStage))
+    }
+    val plan = q.queryExecution.executedPlan
+    val builders = walk(plan, inStage = false).filter { case (n, _) =>
+      n.expressions.exists(_.exists {
+        case _: ExtractFilenameDates | _: DeriveItemId => true
+        case _ => false
+      })
+    }
+    assert(builders.nonEmpty, plan)
+    assert(builders.forall(_._2), s"STAC build projection outside codegen:\n$plan")
+
+    def rows() = build().collect().map(_.toString).sorted.toSeq
+    val generated = rows()
+    val interpreted = {
+      val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+      spark.conf.set(keys(0), "false")
+      spark.conf.set(keys(1), "NO_CODEGEN")
+      try rows() finally keys.foreach(spark.conf.unset)
+    }
+    assert(generated.length == 9)
+    assert(generated == interpreted)
   }
 
   test("items carry bbox, footprint, proj and raster stats from cogify results") {

@@ -113,6 +113,37 @@ class PipelineSpec extends SparkSuite {
     assert(resolved == Set(small, big))
   }
 
+  test("spill sink: a spilled payload is named by its SHA-256; the threshold counts chars") {
+    import spark.implicits._
+    val spill = tempDir("spillname")
+    val big = """{"id":"big","pad":"""" + ("y" * 200) + """"}"""
+    val wide = "ü" * 80 // 160 UTF-8 bytes but 80 characters: inline
+    val routed = SpillSink.route(Seq(big, wide).toDF("item_json"), "item_json",
+      s"file:${spill.getAbsolutePath}", threshold = 100).collect()
+
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(big.getBytes(StandardCharsets.UTF_8))
+    val hex = String.format("%064x", new java.math.BigInteger(1, digest))
+    val url = routed.find(_.getAs[String]("item_json") == big).get
+      .getAs[String]("stac_file_url")
+    assert(url == s"file:${spill.getAbsolutePath}/$hex.json")
+    assert(new String(Files.readAllBytes(Paths.get(spill.getAbsolutePath, s"$hex.json")),
+      StandardCharsets.UTF_8) == big)
+    val w = routed.find(_.getAs[String]("item_json") == wide).get
+    assert(w.getAs[String]("stac_item") == wide && w.getAs[String]("stac_file_url") == null)
+
+    // one character count, behind the byte-length short circuit: a copy
+    // per branch would be hoisted by subexpression elimination and run on
+    // every row
+    val payloads = spark.range(4).select(repeat(lit("y"), (col("id") * 99).cast("int"))
+      .as("item_json"))
+    val plan = SpillSink.route(payloads, "item_json",
+      s"file:${spill.getAbsolutePath}", threshold = 100).queryExecution.optimizedPlan
+    assert(plan.flatMap(_.expressions.flatMap(_.collect {
+      case l: org.apache.spark.sql.catalyst.expressions.Length => l
+    })).size == 1, plan)
+  }
+
   test("publish sink: dry-run records all, failing posts go to DLQ") {
     import spark.implicits._
     val items = Seq("""{"id":1}""", """{"id":2}""", """BAD""").toDF("resolved_item")

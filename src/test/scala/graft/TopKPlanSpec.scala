@@ -63,6 +63,18 @@ class TopKPlanSpec extends SparkSuite {
     assert(out.count() == 4 * 3)
   }
 
+  test("the session's injected strategy plans the node: no extra strategy, one exec pair") {
+    val df = (0 until 50).map(i => (i.toLong, s"k${i % 3}", i % 11))
+      .toDF("id", "key", "score")
+    val out = TopKPerKey.topKPerKey(df, Seq("key"), Seq(("score", true), ("id", false)), 2)
+    assert(out.count() == 3 * 2)
+    assert(spark.experimental.extraStrategies.isEmpty)
+    val execs = out.queryExecution.sparkPlan.collect {
+      case e: graft.plans.TopKPerKeyExec => e.partial
+    }
+    assert(execs.sorted == Seq(false, true), out.queryExecution.sparkPlan)
+  }
+
   test("randomized: parity with window row_number incl. null scores") {
     val rnd = new scala.util.Random(0x70caL)
     for (trial <- 1 to 10) {

@@ -139,5 +139,126 @@ class FilenameDatesSpec extends AnyFunSuite {
 
   test("item id regex matching != once → None (reference assert)") {
     assert(ItemId.derive("nomatch", Some("s3://([^/]*)/(.+).tif$")).isEmpty)
+    assert(ItemId.derive("s3://b/x_201601_201602.tif", Some("_(\\d{6})")).isEmpty)
+  }
+
+  test("item id stem of a multi-byte name, a dot-file and a bare directory") {
+    assert(ItemId.derive("s3://b/p/日本_über.nc.tif", None).contains("日本_über.nc"))
+    assert(ItemId.derive("s3://b/日本/.hidden", None).contains(".hidden"))
+    assert(ItemId.derive("s3://b/ü.x/", None).contains(""))
+    assert(ItemId.derive("日本", None).contains("日本"))
+  }
+
+  // ── differential: the byte scanner against the four-regex table ─────
+  /** The regex-table implementation the byte scanner replaced, kept as
+    * the reference: the first strategy with any hit wins, every hit is
+    * parsed through java.time. */
+  private object RegexTable {
+    import java.time.LocalDateTime
+    private val strategies: Seq[(scala.util.matching.Regex, String => LocalDateTime)] = Seq(
+      ("_(\\d{4}-\\d{2}-\\d{2})".r,
+        (s: String) => LocalDate.parse(s).atStartOfDay()),
+      ("_(\\d{8})".r,
+        (s: String) => LocalDate.of(s.substring(0, 4).toInt, s.substring(4, 6).toInt,
+          s.substring(6, 8).toInt).atStartOfDay()),
+      ("_(\\d{6})".r,
+        (s: String) => LocalDate.of(s.substring(0, 4).toInt, s.substring(4, 6).toInt, 1)
+          .atStartOfDay()),
+      ("_(\\d{4})".r,
+        (s: String) => LocalDate.of(s.toInt, 1, 1).atStartOfDay()))
+
+    private def micros(dt: LocalDateTime): Long = dt.toEpochSecond(ZoneOffset.UTC) * 1000000L
+
+    def extract(filename: String, datetimeRange: Option[String]): Option[Extracted] =
+      try {
+        val dates = strategies.iterator
+          .map { case (re, parse) => re.findAllMatchIn(filename).map(_.group(1)).toSeq -> parse }
+          .find(_._1.nonEmpty)
+          .map { case (hits, parse) => hits.map(parse) }
+          .getOrElse(Seq.empty)
+        dates match {
+          case Seq() => None
+          case many if many.size > 1 =>
+            Some(Extracted(Some(micros(many.min)), Some(micros(many.max)), None))
+          case Seq(single) =>
+            val d = single.toLocalDate
+            datetimeRange match {
+              case Some("month") => Some(Extracted(Some(micros(d.withDayOfMonth(1).atStartOfDay())),
+                Some(micros(d.withDayOfMonth(d.lengthOfMonth()).atStartOfDay())), None))
+              case Some("year") => Some(Extracted(Some(micros(d.withDayOfYear(1).atStartOfDay())),
+                Some(micros(LocalDate.of(d.getYear, 12, 31).atStartOfDay())), None))
+              case Some(_) => None
+              case None => Some(Extracted(None, None, Some(micros(single))))
+            }
+        }
+      } catch { case _: RuntimeException => None }
+
+    def stem(path: String): String = {
+      val name = path.substring(path.lastIndexOf('/') + 1)
+      val dot = name.lastIndexOf('.')
+      if (dot > 0) name.substring(0, dot) else name
+    }
+  }
+
+  private def agrees(fn: String, rng: Option[String]): Unit = {
+    val want = RegexTable.extract(fn, rng)
+    assert(FilenameDates.extractDatesOrNull(fn, rng) == want, s"for $fn rng=$rng")
+    if (want.isEmpty) intercept[IllegalArgumentException](ex(fn, rng))
+    else assert(ex(fn, rng) == want.get, s"strict, for $fn rng=$rng")
+  }
+
+  private val ranges = Seq(None, Some("month"), Some("year"), Some("week"))
+
+  test("differential: planted edge cases agree with the regex table") {
+    val planted = Seq(
+      "s3://b/x_123456789.tif", // an 8-digit hit inside 9 digits
+      "s3://b/x_2016_2017.tif", // several hits → (min, max)
+      "s3://b/x_20160230.tif", "s3://b/x_2016-02-30.tif", // invalid, no fall-through
+      "s3://b/x_20000229.tif", "s3://b/x_19000229.tif", // leap days
+      "s3://b/x_0000.tif", // year zero
+      "s3://ü/日本_20160101ü.tif", "s3://b/ü_2016-03-04日本", "s3://b/日本_201605",
+      "s3://b/x_2016-03-04_1999.tif", "s3://b/x_2016-3-04_1999.tif", "s3://b/_", "",
+      "s3://b/x__2016", "s3://b/x_2016-03-0", "s3://b/x_201613_2016.tif")
+    planted.foreach(fn => ranges.foreach(agrees(fn, _)))
+
+    assert(FilenameDates.extractDatesOrNull("s3://b/x_123456789.tif", None).isEmpty)
+    assert(ex("s3://b/x_2016_2017.tif", Some("week")) ==
+      Extracted(Some(us(2016, 1, 1)), Some(us(2017, 1, 1)), None))
+    assert(FilenameDates.extractDatesOrNull("s3://b/x_20160230.tif", None).isEmpty)
+    assert(FilenameDates.extractDatesOrNull("s3://b/x_2016-02-30.tif", None).isEmpty)
+    assert(ex("s3://b/x_20000229.tif", None) == Extracted(None, None, Some(us(2000, 2, 29))))
+    assert(FilenameDates.extractDatesOrNull("s3://b/x_19000229.tif", None).isEmpty)
+    assert(ex("s3://b/x_0000.tif", Some("year")) ==
+      Extracted(Some(us(0, 1, 1)), Some(us(0, 12, 31)), None))
+    assert(ex("s3://ü/日本_20160101ü.tif", Some("month")) ==
+      Extracted(Some(us(2016, 1, 1)), Some(us(2016, 1, 31)), None))
+    assert(FilenameDates.extractDatesOrNull("s3://b/x_2016-03-04.tif", Some("week")).isEmpty)
+  }
+
+  test("differential: 10k generated names agree with the regex table") {
+    val r = new scala.util.Random(0x5eed)
+    def digits(k: Int) = (1 to k).map(_ => ('0' + r.nextInt(10)).toChar).mkString
+    def plausible(): String = {
+      val y = "%04d".format(if (r.nextInt(8) == 0) r.nextInt(10000) else 1890 + r.nextInt(150))
+      val m = "%02d".format(r.nextInt(14))
+      val d = "%02d".format(r.nextInt(33))
+      r.nextInt(5) match {
+        case 0 => s"$y-$m-$d"
+        case 1 => s"$y$m$d"
+        case 2 => s"$y$m"
+        case 3 => y
+        case _ => s"$y-$m"
+      }
+    }
+    val pieces: Seq[() => String] = Seq(
+      () => "_", () => "_", () => "-", () => ".", () => "/", () => "x", () => "tif",
+      () => "ü", () => "日本", () => "\uD83C\uDF0D", () => digits(1 + r.nextInt(10)),
+      () => plausible(), () => plausible(), () => "_" + plausible())
+    (1 to 10000).foreach { _ =>
+      val fn = "s3://b/" + (1 to 1 + r.nextInt(8)).map(_ => pieces(r.nextInt(pieces.size))())
+        .mkString
+      agrees(fn, ranges(r.nextInt(ranges.size)))
+      assert(ItemId.derive(fn, None).contains(RegexTable.stem(fn)), fn)
+    }
   }
 }
