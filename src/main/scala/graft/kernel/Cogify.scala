@@ -1,8 +1,5 @@
 package graft.kernel
 
-import java.io.ByteArrayOutputStream
-import java.util.zip.{Deflater, Inflater}
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Dataset
@@ -18,12 +15,13 @@ import Raster._
   * partitioned `mapPartitions` stage with broadcast per-collection config
   * and targeted retry (reference B5's RasterioIOError×5).
   *
-  * Real here: config registry, array fixups, affine/extent math, tiling,
-  * deflate compression, baseline-GeoTIFF output ([[Tiff]] — externally
-  * parseable tags), NetCDF-3 classic ([[Netcdf]]) and NetCDF-4/HDF5
-  * ([[Hdf5]]) decode behind [[FetchGridReader]]'s magic sniff, and the
-  * partitioned execution + retry. [[FakeGridReader]] remains the
-  * synthetic-grid default for specs that don't care about bytes.
+  * Real here: config registry, array fixups, affine/extent math, the
+  * COG output ([[Tiff.writeCog]] — tiling, deflate, overviews,
+  * externally parseable tags), NetCDF-3 classic ([[Netcdf]]),
+  * NetCDF-4/HDF5 ([[Hdf5]]) and TIFF decode behind [[FetchGridReader]]'s
+  * one magic sniff, and the partitioned execution + retry. Callers name
+  * their reader; [[FakeGridReader]]'s synthetic grids serve specs and
+  * the smoke demo that don't care about source bytes.
   */
 object Cogify {
 
@@ -48,6 +46,10 @@ object Cogify {
     require(bandVariables.isEmpty || bandVariables.head == variableName,
       s"bandVariables must lead with variableName '$variableName' " +
         "(the stats/nodata anchor band)")
+
+    /** The variables a reader decodes, one band each. */
+    def bandNames: Seq[String] =
+      if (bandVariables.isEmpty) Seq(variableName) else bandVariables
   }
 
   final case class CogifyTask(collection: String, href: String,
@@ -60,32 +62,18 @@ object Cogify {
       affine: Seq[Double], epsg: Int, stats: Option[BandStats.Stats],
       error: Option[String])
 
-  /** Pluggable decode stage. */
+  /** Pluggable decode stage: one grid per [[CollectionConfig.bandNames]]
+    * entry plus the shared x/y coordinate vectors. [[cogifyOne]] rejects
+    * a band count that does not match the config. */
   trait GridReader extends Serializable {
-    def read(task: CogifyTask, config: CollectionConfig):
-      (Grid, Option[Array[Double]], Option[Array[Double]])
-
-    /** Multi-variable decode (config.bandVariables): one band per
-      * variable, shared coordinate vectors. The default wraps the
-      * single-variable path for single-variable configs; a reader
-      * without multi-band support must NOT silently drop requested
-      * bands, so a multi-variable config fails fast (non-retryable →
-      * DLQ row) instead. */
     def readBands(task: CogifyTask, config: CollectionConfig):
-        (Seq[Grid], Option[Array[Double]], Option[Array[Double]]) = {
-      if (config.bandVariables.size > 1)
-        throw new UnsupportedOperationException(
-          s"reader ${getClass.getSimpleName} decodes one variable per " +
-            s"task; config requested ${config.bandVariables.size} bands")
-      val (g, xs, ys) = read(task, config)
-      (Seq(g), xs, ys)
-    }
+        (Seq[Grid], Option[Array[Double]], Option[Array[Double]])
   }
 
-  /** STUB reader: deterministic synthetic grid derived from the href
-    * hash (a real NetCDF reader implements the same trait). */
+  /** STUB reader: one deterministic synthetic grid derived from the href
+    * hash, whatever the config names. */
   final class FakeGridReader(width: Int = 360, height: Int = 180) extends GridReader {
-    override def read(task: CogifyTask, config: CollectionConfig) = {
+    override def readBands(task: CogifyTask, config: CollectionConfig) = {
       val seed = graft.functions.SimHash.fnv1a64(task.href)
       val data = new Array[Float](width * height)
       var i = 0
@@ -98,46 +86,22 @@ object Cogify {
       }
       val xs = Array.tabulate(width)(c => -180.0 + 360.0 * (c + 0.5) / width)
       val ys = Array.tabulate(height)(r => -90.0 + 180.0 * (r + 0.5) / height)
-      (Grid(width, height, data, Some(-9999f)), Some(xs), Some(ys))
-    }
-  }
-
-  /** Production-shaped reader for already-raster sources: localizes the
-    * href through a [[graft.sources.Fetch.Fetcher]] (authenticated HTTP
-    * session per partition, or Hadoop FS — reference A7,
-    * cogify/handler.py:49-71), then decodes baseline-TIFF bytes
-    * ([[Tiff.readGrid]]). Coordinate vectors are rebuilt as pixel-center
-    * positions from the file's affine, so downstream extent derivation
-    * (handler.py:96-103) sees exactly what a NetCDF x/y variable would
-    * carry. A NetCDF reader slots behind the same two seams: fetch →
-    * decode.
-    */
-  final class TiffGridReader(mkFetcher: () => graft.sources.Fetch.Fetcher)
-      extends GridReader {
-    @transient private lazy val fetcher = mkFetcher()
-    override def read(task: CogifyTask, config: CollectionConfig) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-fetch").toFile
-      try {
-        val local = fetcher.fetch(task.href, tmp)
-        val (grid, affine) = Tiff.readGrid(
-          java.nio.file.Files.readAllBytes(local.toPath))
-        val xs = Array.tabulate(grid.width)(j => affine.c + affine.a * (j + 0.5))
-        val ys = Array.tabulate(grid.height)(i => affine.f + affine.e * (i + 0.5))
-        (grid, Some(xs), Some(ys))
-      } finally {
-        tmp.listFiles().foreach(_.delete()); tmp.delete()
-      }
+      (Seq(Grid(width, height, data, Some(-9999f))), Some(xs), Some(ys))
     }
   }
 
   /** THE production reader: localize via a [[graft.sources.Fetch.Fetcher]]
-    * (A7), sniff the container magic, decode — NetCDF-3 classic through
-    * [[Netcdf]] (variable + `_FillValue` + x/y coordinate vars per the
-    * collection config, handler.py:84-101), NetCDF-4/HDF5 (magic
-    * `\x89HDF`) through [[Hdf5]] with the configured group path, and
-    * baseline TIFF through [[Tiff.readGrid]]. Unrecognized containers
-    * fail fast with a non-retryable error that routes the task to the
-    * DLQ instead of burning retry attempts.
+    * (authenticated HTTP session per partition, or Hadoop FS — A7,
+    * cogify/handler.py:49-71), sniff the container magic once, and
+    * decode every configured band from that one fetch and one parse —
+    * NetCDF-3 classic through [[Netcdf]] (variables + `_FillValue` +
+    * x/y coordinate vars per the collection config, handler.py:84-101),
+    * NetCDF-4/HDF5 (magic `\x89HDF`) through [[Hdf5]] with the
+    * configured group path, and TIFF through [[Tiff.readBands]], whose
+    * coordinate vectors are rebuilt as pixel centers from the file's
+    * affine (what a NetCDF x/y variable would carry). Unrecognized
+    * containers fail fast with a non-retryable error that routes the
+    * task to the DLQ instead of burning retry attempts.
     */
   final class FetchGridReader(mkFetcher: () => graft.sources.Fetch.Fetcher)
       extends GridReader {
@@ -153,138 +117,60 @@ object Cogify {
       }
     }
 
-    override def read(task: CogifyTask, config: CollectionConfig) =
-      decode(localBytes(task), config)
-
-    /** Multi-variable decode: ONE fetch and ONE container parse, then
-      * a grid per configured band variable (TIFF sources carry their
-      * planes positionally, so the names only set the band count
-      * there). */
-    override def readBands(task: CogifyTask, config: CollectionConfig) =
-      if (config.bandVariables.isEmpty) super.readBands(task, config)
-      else {
-        val bytes = localBytes(task)
-        bytes.take(4).map(_ & 0xff) match {
-          case Array(0x43, 0x44, 0x46, _) => // "CDF" — NetCDF-3 classic
-            val nc = Netcdf.parse(bytes)
-            (config.bandVariables.map(Netcdf.readGrid(nc, _)),
-              config.xVariable.map(Netcdf.readCoord(nc, _)),
-              config.yVariable.map(Netcdf.readCoord(nc, _)))
-          case Array(0x49, 0x49, _, _) | Array(0x4d, 0x4d, _, _) =>
-            val (bands, affine) = Tiff.readBands(bytes)
-            // TIFF planes are positional, so the variable names can't
-            // select — but a count mismatch is a config/file conflict,
-            // not something to accept silently
-            require(bands.size == config.bandVariables.size,
-              s"config lists ${config.bandVariables.size} band variables " +
-                s"but the TIFF carries ${bands.size} planes")
-            val w = bands.head.width
-            val h = bands.head.height
-            val xs = Array.tabulate(w)(j => affine.c + affine.a * (j + 0.5))
-            val ys = Array.tabulate(h)(i => affine.f + affine.e * (i + 0.5))
-            (bands, Some(xs), Some(ys))
-          case Array(0x89, 0x48, 0x44, 0x46) => // "\x89HDF" — NetCDF-4/HDF5
-            val h5 = Hdf5.parse(bytes)
-            val at = (name: String) =>
-              (config.group.toSeq :+ name).mkString("/")
-            (config.bandVariables.map(n => Hdf5.readGrid(h5, at(n))),
-              config.xVariable.map(n => Hdf5.readCoord(h5, at(n))),
-              config.yVariable.map(n => Hdf5.readCoord(h5, at(n))))
-          case other =>
-            throw new UnsupportedOperationException(
-              s"unrecognized container magic ${other.map(b => f"$b%02x").mkString}")
-        }
-      }
-
-    private def decode(bytes: Array[Byte], config: CollectionConfig) =
+    override def readBands(task: CogifyTask, config: CollectionConfig) = {
+      val bytes = localBytes(task)
       bytes.take(4).map(_ & 0xff) match {
         case Array(0x43, 0x44, 0x46, _) => // "CDF" — NetCDF-3 classic
           val nc = Netcdf.parse(bytes)
-          val grid = Netcdf.readGrid(nc, config.variableName)
-          (grid,
+          (config.bandNames.map(Netcdf.readGrid(nc, _)),
             config.xVariable.map(Netcdf.readCoord(nc, _)),
             config.yVariable.map(Netcdf.readCoord(nc, _)))
         case Array(0x49, 0x49, _, _) | Array(0x4d, 0x4d, _, _) => // "II"/"MM"
-          val (grid, affine) = Tiff.readGrid(bytes)
-          val xs = Array.tabulate(grid.width)(j => affine.c + affine.a * (j + 0.5))
-          val ys = Array.tabulate(grid.height)(i => affine.f + affine.e * (i + 0.5))
-          (grid, Some(xs), Some(ys))
+          val (planes, affine) = Tiff.readBands(bytes)
+          // planes are positional, so the names can't select: a
+          // single-variable config takes plane 0, and a band list must
+          // match the plane count — a mismatch is a config/file
+          // conflict, not something to accept silently
+          val bands =
+            if (config.bandVariables.isEmpty) planes.take(1)
+            else {
+              require(planes.size == config.bandVariables.size,
+                s"config lists ${config.bandVariables.size} band variables " +
+                  s"but the TIFF carries ${planes.size} planes")
+              planes
+            }
+          val xs = Array.tabulate(planes.head.width)(j => affine.c + affine.a * (j + 0.5))
+          val ys = Array.tabulate(planes.head.height)(i => affine.f + affine.e * (i + 0.5))
+          (bands, Some(xs), Some(ys))
         case Array(0x89, 0x48, 0x44, 0x46) => // "\x89HDF" — NetCDF-4/HDF5
           val h5 = Hdf5.parse(bytes)
           // NetCDF-4 variables are HDF5 datasets, grouped per the config
           // (handler.py:84 `group=...`); coordinate vars live alongside
           val at = (name: String) =>
             (config.group.toSeq :+ name).mkString("/")
-          val grid = Hdf5.readGrid(h5, at(config.variableName))
-          (grid,
+          (config.bandNames.map(n => Hdf5.readGrid(h5, at(n))),
             config.xVariable.map(n => Hdf5.readCoord(h5, at(n))),
             config.yVariable.map(n => Hdf5.readCoord(h5, at(n))))
         case other =>
           throw new UnsupportedOperationException(
             s"unrecognized container magic ${other.map(b => f"$b%02x").mkString}")
       }
-  }
-
-  val TileSize = 256 // handler.py:28-29
-
-  final case class Tile(tileCol: Int, tileRow: Int, deflated: Array[Byte])
-
-  /** 256×256 deflate tiling of a grid (edge tiles padded with nodata —
-    * the TIFF tile convention). */
-  def tile(g: Grid): Seq[Tile] = {
-    val pad = g.nodata.getOrElse(0f)
-    val tilesX = (g.width + TileSize - 1) / TileSize
-    val tilesY = (g.height + TileSize - 1) / TileSize
-    for {
-      ty <- 0 until tilesY
-      tx <- 0 until tilesX
-    } yield {
-      val buf = java.nio.ByteBuffer.allocate(TileSize * TileSize * 4)
-        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      var r = 0
-      while (r < TileSize) {
-        var c = 0
-        while (c < TileSize) {
-          val gr = ty * TileSize + r
-          val gc = tx * TileSize + c
-          buf.putFloat(if (gr < g.height && gc < g.width) g(gr, gc) else pad)
-          c += 1
-        }
-        r += 1
-      }
-      Tile(tx, ty, deflate(buf.array()))
     }
   }
 
-  def deflate(bytes: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(Deflater.DEFAULT_COMPRESSION)
-    d.setInput(bytes); d.finish()
-    val out = new ByteArrayOutputStream()
-    val chunk = new Array[Byte](8192)
-    while (!d.finished()) out.write(chunk, 0, d.deflate(chunk))
-    d.end()
-    out.toByteArray
-  }
-
-  def inflate(bytes: Array[Byte], expectedLen: Int): Array[Byte] = {
-    val inf = new Inflater()
-    inf.setInput(bytes)
-    val out = new Array[Byte](expectedLen)
-    var off = 0
-    while (!inf.finished() && off < expectedLen)
-      off += inf.inflate(out, off, expectedLen - off)
-    inf.end()
-    out
-  }
-
   /** One task through the kernel: decode → fixups → extent → affine →
-    * tile+deflate → write container. Multi-variable configs
-    * (`bandVariables`) produce one multi-band COG; the per-collection
-    * fixups apply to every band (they correct the grid orientation of
-    * the shared container). */
+    * write the COG. Multi-variable configs (`bandVariables`) produce one
+    * multi-band COG; the per-collection fixups apply to every band (they
+    * correct the grid orientation of the shared container). */
   def cogifyOne(task: CogifyTask, config: CollectionConfig, reader: GridReader,
       outDir: String, conf: Configuration): CogifyResult = {
     val (raw, xs, ys) = reader.readBands(task, config)
+    // whatever the reader, a requested band must never drop silently:
+    // a count mismatch fails the task (non-retryable → DLQ row)
+    if (raw.size != config.bandNames.size)
+      throw new UnsupportedOperationException(
+        s"reader ${reader.getClass.getSimpleName} decoded ${raw.size} band(s); " +
+          s"config names ${config.bandNames.size}: ${config.bandNames.mkString(", ")}")
     var bands = raw
     if (config.transposeFix) bands = bands.map(transpose) // handler.py:90-91
     if (config.flipudFix) bands = bands.map(flipud) // handler.py:92-93
@@ -303,18 +189,15 @@ object Cogify {
     // the top-left recipe keeps the source's geographic degrees; the
     // default recipe reprojects the extent to web-mercator meters
     val epsg = if (config.useTopLeftRecipe) 4326 else 3857
-    // writeCogBands tiles every band itself — tile here only on the
-    // single-band paths, and count multi-band tiles arithmetically
-    // (dims are shared, so per-band tile counts are equal)
-    val tilesPerBand = ((grid.width + TileSize - 1) / TileSize) *
-      ((grid.height + TileSize - 1) / TileSize)
+    // the writer tiles every band itself; dims are shared, so the
+    // per-band tile count is arithmetic
+    val tilesPerBand = ((grid.width + Tiff.TileSize - 1) / Tiff.TileSize) *
+      ((grid.height + Tiff.TileSize - 1) / Tiff.TileSize)
     // the reference's GTiff/deflate profile + `cog_translate` overviews
     // (handler.py:25-29): IFD-first layout with a 2×-decimated overview
     // pyramid, multi-band as `PlanarConfiguration=2` planes decimated in
     // lockstep — see [[Tiff]]
-    val payload = writeBytes(outPath, conf,
-      if (bands.size == 1) Tiff.writeCog(grid, affine, tile(grid), Some(epsg))
-      else Tiff.writeCogBands(bands, affine, Some(epsg)))
+    val payload = writeBytes(outPath, conf, Tiff.writeCog(bands, affine, Some(epsg)))
     CogifyResult(task.collection, task.href, task.granule_id, outPath,
       grid.width, grid.height, bands.size,
       bands.size * tilesPerBand, payload,
@@ -362,7 +245,7 @@ object Cogify {
     * DLQ-routable result rows, not task failures. */
   def run(tasks: Dataset[CogifyTask], configs: Map[String, CollectionConfig],
       outDir: String, maxAttempts: Int = 5,
-      mkReader: () => GridReader = () => new FakeGridReader()): Dataset[CogifyResult] = {
+      mkReader: () => GridReader): Dataset[CogifyResult] = {
     val spark = tasks.sparkSession
     import spark.implicits._
     val bcConfigs = spark.sparkContext.broadcast(configs)

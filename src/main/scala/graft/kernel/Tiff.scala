@@ -1,16 +1,19 @@
 package graft.kernel
 
+import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
+import java.util.zip.{Deflater, Inflater}
 
 import Raster.{Affine, Grid}
 
 /** Minimal TIFF/COG (GeoTIFF-flavored) writer + parser for the cogify
   * output (reference COG profile, cogify/handler.py:25-29 +
   * `cog_translate`: GTiff, 256×256 tiles, deflate, overview pyramid).
-  * Little-endian TIFF laid out cloud-optimized: ALL IFDs (the
-  * full-resolution page plus 2×-decimated reduced-resolution overviews,
-  * `NewSubfileType=1`) first, then the external value areas, then tile
-  * data — so a range-read of the file head yields every page's metadata.
+  * [[writeCog]] is the one writer: little-endian TIFF laid out
+  * cloud-optimized, ALL IFDs (the full-resolution page plus 2×-decimated
+  * reduced-resolution overviews, `NewSubfileType=1`) first, then the
+  * external value areas, then tile data — so a range-read of the file
+  * head yields every page's metadata.
   * Tiled float32, Adobe-deflate compressed, GeoTIFF
   * ModelPixelScale/ModelTiepoint carrying axis-aligned affines (the
   * full 4x4 ModelTransformation for rotated ones), GDAL_NODATA ASCII
@@ -21,10 +24,11 @@ import Raster.{Affine, Grid}
   * Beyond the single-band classic profile (the reference's common case,
   * cogify/handler.py:152): multi-band pages write as separate planes
   * (`PlanarConfiguration=2`, band-major tile order — the layout that
-  * keeps each band range-readable on its own), and the BigTIFF
-  * variant (version 43, 8-byte offsets/counts) carries payloads past
-  * classic TIFF's 4 GiB ceiling; [[writeCogBands]] selects it
-  * automatically when the payload demands it.
+  * keeps each band range-readable on its own). The writer builds the
+  * file in one byte array, so a COG stays under 2 GiB and classic
+  * 4-byte offsets always suffice; the BigTIFF variant (version 43,
+  * 8-byte offsets/counts) is written only on request, so the reader
+  * that third-party BigTIFF inputs need stays round-trip tested.
   */
 object Tiff {
 
@@ -72,11 +76,59 @@ object Tiff {
   private def le(n: Int): ByteBuffer =
     ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
 
-  /** Serialize one tiled float32 grid as a single-page TIFF. `tiles`
-    * must be the row-major 256x256 deflate tiles of `g` ([[Cogify.tile]]'s
-    * output order). */
-  def write(g: Grid, affine: Affine, tiles: Seq[Cogify.Tile]): Array[Byte] =
-    writePages(Seq((Seq((g, tiles)), affine)))
+  /** The largest byte array the JVM allocates: the file-size ceiling. */
+  private val MaxFileBytes = Int.MaxValue - 8
+
+  val TileSize = 256 // handler.py:28-29
+
+  final case class Tile(tileCol: Int, tileRow: Int, deflated: Array[Byte])
+
+  /** 256×256 deflate tiling of a grid (edge tiles padded with nodata —
+    * the TIFF tile convention). */
+  def tile(g: Grid): Seq[Tile] = {
+    val pad = g.nodata.getOrElse(0f)
+    val tilesX = (g.width + TileSize - 1) / TileSize
+    val tilesY = (g.height + TileSize - 1) / TileSize
+    for {
+      ty <- 0 until tilesY
+      tx <- 0 until tilesX
+    } yield {
+      val buf = le(TileSize * TileSize * 4)
+      var r = 0
+      while (r < TileSize) {
+        var c = 0
+        while (c < TileSize) {
+          val gr = ty * TileSize + r
+          val gc = tx * TileSize + c
+          buf.putFloat(if (gr < g.height && gc < g.width) g(gr, gc) else pad)
+          c += 1
+        }
+        r += 1
+      }
+      Tile(tx, ty, deflate(buf.array()))
+    }
+  }
+
+  private def deflate(bytes: Array[Byte]): Array[Byte] = {
+    val d = new Deflater(Deflater.DEFAULT_COMPRESSION)
+    d.setInput(bytes); d.finish()
+    val out = new ByteArrayOutputStream()
+    val chunk = new Array[Byte](8192)
+    while (!d.finished()) out.write(chunk, 0, d.deflate(chunk))
+    d.end()
+    out.toByteArray
+  }
+
+  def inflate(bytes: Array[Byte], expectedLen: Int): Array[Byte] = {
+    val inf = new Inflater()
+    inf.setInput(bytes)
+    val out = new Array[Byte](expectedLen)
+    var off = 0
+    while (!inf.finished() && off < expectedLen)
+      off += inf.inflate(out, off, expectedLen - off)
+    inf.end()
+    out
+  }
 
   /** 2x nearest-neighbor decimation (the reference `cog_translate`
     * default resampling). */
@@ -97,20 +149,6 @@ object Tiff {
     Grid(w, h, data, cur.nodata)
   }
 
-  /** The 2x-decimated overview chain down to the level that fits one
-    * tile; each level's pixel size doubles. */
-  def overviewLevels(g: Grid, affine: Affine): Seq[(Grid, Affine)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Grid, Affine)]
-    var cur = g
-    var aff = affine
-    while (math.max(cur.width, cur.height) > Cogify.TileSize) {
-      cur = decimate(cur)
-      aff = Affine(aff.a * 2, aff.b * 2, aff.c, aff.d * 2, aff.e * 2, aff.f)
-      out += ((cur, aff))
-    }
-    out.toSeq
-  }
-
   /** GeoKeyDirectory content for an EPSG code (GeoTIFF spec §2.4): the
     * 4-short header then (KeyID, TIFFTagLocation=0 → inline, Count=1,
     * Value) rows — geographic model for 4326, projected otherwise. */
@@ -124,38 +162,29 @@ object Tiff {
       ++ keys.flatMap { case (id, v) => Seq(id.toLong, 0L, 1L, v.toLong) })
   }
 
-  /** Cloud-optimized write: the full-resolution page plus its overview
-    * pyramid, every IFD up front; `epsg` lands in the GeoKeyDirectory so
-    * external readers see the CRS, not just the affine. */
-  def writeCog(g: Grid, affine: Affine, tiles: Seq[Cogify.Tile],
-      epsg: Option[Int] = Some(4326)): Array[Byte] =
-    writePages((Seq((g, tiles)), affine) +:
-      overviewLevels(g, affine).map { case (og, oa) => (Seq((og, Cogify.tile(og))), oa) },
-      epsg)
-
-  /** Multi-band cloud-optimized write: every band is a separate plane
-    * (`PlanarConfiguration=2`) with its own band-major tile run,
-    * decimated in lockstep for the overview pyramid. Switches to BigTIFF
-    * when the payload approaches classic TIFF's 4 GiB offset ceiling —
-    * or when forced, so the format is testable without a 4 GiB fixture. */
-  def writeCogBands(bands: Seq[Grid], affine: Affine,
+  /** The COG write: the full-resolution page plus its overview pyramid
+    * (2× decimation down to the level that fits one tile, each level's
+    * pixel size doubled), every IFD up front. Each band is a separate
+    * plane with its own band-major tile run (`PlanarConfiguration=2`
+    * when there are several), decimated in lockstep. `epsg` lands in the
+    * GeoKeyDirectory so external readers see the CRS, not just the
+    * affine. `forceBigTiff` writes the version-43 container. */
+  def writeCog(bands: Seq[Grid], affine: Affine,
       epsg: Option[Int] = Some(4326),
       forceBigTiff: Boolean = false): Array[Byte] = {
     require(bands.nonEmpty, "at least one band")
     require(bands.forall(b => b.width == bands.head.width &&
       b.height == bands.head.height), "bands must share dimensions")
     val pages = scala.collection.mutable.ArrayBuffer(
-      (bands.map(b => (b, Cogify.tile(b))), affine))
+      (bands.map(b => (b, tile(b))), affine))
     var cur = bands
     var aff = affine
-    while (math.max(cur.head.width, cur.head.height) > Cogify.TileSize) {
+    while (math.max(cur.head.width, cur.head.height) > TileSize) {
       cur = cur.map(decimate)
       aff = Affine(aff.a * 2, aff.b * 2, aff.c, aff.d * 2, aff.e * 2, aff.f)
-      pages += ((cur.map(b => (b, Cogify.tile(b))), aff))
+      pages += ((cur.map(b => (b, tile(b))), aff))
     }
-    val payload = pages.iterator
-      .flatMap(_._1).flatMap(_._2).map(_.deflated.length.toLong).sum
-    writePages(pages.toSeq, epsg, bigTiff = forceBigTiff || payload > (1L << 31))
+    writePages(pages.toSeq, epsg, forceBigTiff)
   }
 
   /** Multi-page writer. Layout: header | IFD0..IFDn | external value
@@ -165,8 +194,8 @@ object Tiff {
     * affine); multi-band pages write band-major tile runs with
     * `PlanarConfiguration=2`. `bigTiff` selects the version-43 container
     * (8-byte counts and offsets throughout). */
-  private def writePages(pages: Seq[(Seq[(Grid, Seq[Cogify.Tile])], Affine)],
-      epsg: Option[Int] = None, bigTiff: Boolean = false): Array[Byte] = {
+  private def writePages(pages: Seq[(Seq[(Grid, Seq[Tile])], Affine)],
+      epsg: Option[Int], bigTiff: Boolean): Array[Byte] = {
 
     val offType = if (bigTiff) LONG8 else LONG
     def offsBytes(vs: Seq[Long]): Array[Byte] =
@@ -232,8 +261,8 @@ object Tiff {
           Entry(TagPhotometric, SHORT, 1, inline = Some(1L)), // BlackIsZero
           Entry(TagSamplesPerPixel, SHORT, 1, inline = Some(nb.toLong))) ++
           planar ++ Vector(
-          Entry(TagTileWidth, LONG, 1, inline = Some(Cogify.TileSize.toLong)),
-          Entry(TagTileLength, LONG, 1, inline = Some(Cogify.TileSize.toLong)),
+          Entry(TagTileWidth, LONG, 1, inline = Some(TileSize.toLong)),
+          Entry(TagTileLength, LONG, 1, inline = Some(TileSize.toLong)),
           Entry(TagTileOffsets, offType, n,
             external = Some(new Array[Byte](typeSize(offType) * n))),
           Entry(TagTileByteCounts, offType, n,
@@ -273,6 +302,8 @@ object Tiff {
       }
     }
 
+    require(tileCursor <= MaxFileBytes, s"COG would be $tileCursor bytes; the " +
+      s"writer builds a file in one byte array, limited to $MaxFileBytes bytes")
     val buf = le(tileCursor.toInt)
     if (bigTiff) // version 43: offset-size descriptor, 8-byte IFD offset
       buf.put('I'.toByte).put('I'.toByte).putShort(43)
@@ -374,9 +405,7 @@ object Tiff {
                 else buf.getInt().toLong & 0xffffffffL)
   }
 
-  /** Full decode: inflate + stitch the tiles back into a grid and rebuild
-    * the affine from the GeoTIFF tags — the inverse of [[write]]. For a
-    * multi-band file this returns band 0; use [[readBands]] for all. */
+  /** Band 0 of [[readBands]]: the full-resolution grid and its affine. */
   def readGrid(bytes: Array[Byte]): (Grid, Affine) = {
     val (bands, affine) = readBands(bytes)
     (bands.head, affine)
@@ -416,7 +445,7 @@ object Tiff {
       (0 until tilesPerBand).foreach { i =>
         val run = b * tilesPerBand + i
         val (off, len) = (offsets(run), counts(run))
-        val raw = Cogify.inflate(
+        val raw = inflate(
           java.util.Arrays.copyOfRange(bytes, off.toInt, (off + len).toInt), tw * th * 4)
         val tb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
         val (tx, ty) = (i % tilesX, i / tilesX)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.functions.GraftFunctions._
 import graft.sinks.{PublishSink, SpillSink, Transfer}
 import graft.sources.Discovery
+import graft.streaming.EventStream
 
 /** The reference's three state machines composed as ONE logical plan
   * (SURVEY §3: discover → [transfer] → build-stac → submit, with the
@@ -219,10 +220,7 @@ object Ingest {
       // on these key columns (the reference's A10 idempotence for
       // re-delivered SQS messages); None for exactly-once sources
       dedupKeys: Option[Seq[String]] = None): StreamingQuery = {
-    val schema = spark.read.parquet(assetDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(assetDir)
+    val stream = EventStream.readEvents(spark, assetDir, maxFilesPerTrigger)
     dedupKeys.fold(stream)(ks => stream.dropDuplicates(ks))
       .writeStream
       .outputMode("append")

@@ -109,7 +109,7 @@ object Smoke {
     val cogOut = Cogify.run(cogTasks,
       Map("OMDOAO3e" -> Cogify.CollectionConfig("ColumnAmountO3",
         useTopLeftRecipe = true, flipudFix = true)),
-      s"file:${work.resolve("cogs")}")
+      s"file:${work.resolve("cogs")}", mkReader = () => new Cogify.FakeGridReader())
     cogOut.select("collection", "filename", "width", "height", "n_tiles", "payload_bytes")
       .show(false)
 

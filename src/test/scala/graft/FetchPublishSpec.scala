@@ -7,7 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.kernel.{Cogify, Raster, Tiff}
-import graft.kernel.Cogify.{CogifyTask, CollectionConfig, TiffGridReader}
+import graft.kernel.Cogify.{CogifyTask, CollectionConfig, FetchGridReader}
 import graft.kernel.Raster.{Extent, Grid}
 import graft.sinks.PublishSink
 import graft.sources.Fetch
@@ -15,7 +15,7 @@ import graft.sources.Fetch
 /** The two authenticated-HTTP seams against a local stub server:
   * download fetch (reference A7, cogify/handler.py:49-71 — Earthdata
   * basic-auth session per process) driven through the cogify kernel via
-  * [[TiffGridReader]], and the OAuth2 client-credentials publish
+  * [[FetchGridReader]], and the OAuth2 client-credentials publish
   * transport (reference A19, submit-stac/handler.py:57-93 — one token
   * per process, bearer POST, non-2xx → DLQ).
   */
@@ -51,7 +51,7 @@ class FetchPublishSpec extends SparkSuite {
   private lazy val tiffBytes: Array[Byte] = {
     val g = Grid(300, 200, Array.tabulate(300 * 200)(i => (i % 251).toFloat), Some(-1f))
     val affine = Raster.topLeftRecipe(Extent(-30, 10, 30, 50), 300, 200)
-    Tiff.write(g, affine, Cogify.tile(g))
+    Tiff.writeCog(Seq(g), affine)
   }
 
   test("http fetcher: basic-auth download, 401 without credentials raises") {
@@ -312,7 +312,7 @@ class FetchPublishSpec extends SparkSuite {
       val results = Cogify.run(tasks.toDS(),
         Map("C1" -> CollectionConfig("data", useTopLeftRecipe = true)),
         s"file:$out",
-        mkReader = () => new TiffGridReader(() => new Fetch.RoutingFetcher(Some(("u", "p")))))
+        mkReader = () => new FetchGridReader(() => new Fetch.RoutingFetcher(Some(("u", "p")))))
         .collect()
       assert(results.length == 1 && results.head.error.isEmpty)
       assert(results.head.width == 300 && results.head.height == 200)
@@ -334,7 +334,7 @@ class FetchPublishSpec extends SparkSuite {
       val results = Cogify.run(
         Seq(CogifyTask("C1", s"$base/granules/g3.tif", None, upload = false)).toDS(),
         Map.empty, s"file:$out", maxAttempts = 3,
-        mkReader = () => new TiffGridReader(() => new Fetch.HttpFetcher(None)))
+        mkReader = () => new FetchGridReader(() => new Fetch.HttpFetcher(None)))
         .collect()
       assert(results.length == 1)
       assert(results.head.error.exists(_.contains("401")))

@@ -186,7 +186,7 @@ class IngestPipelineSpec extends SparkSuite {
       Seq(CogifyTask("no2", "file:/x/OMI_trno2_20160101.tif", None,
         upload = false)).toDS(),
       Map("no2" -> CollectionConfig("data", useTopLeftRecipe = true)),
-      s"file:$out").collect()
+      s"file:$out", mkReader = () => new Cogify.FakeGridReader()).collect()
     assert(results.head.error.isEmpty && results.head.epsg == 4326)
     val stats = results.head.stats.get
     assert(stats.count == 360L * 180L) // FakeGridReader emits no nodata

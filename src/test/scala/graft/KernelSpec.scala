@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.kernel.{BandStats, Cogify, Raster}
+import graft.kernel.{BandStats, Cogify, Raster, Tiff}
 import graft.kernel.Cogify.{CogifyTask, CollectionConfig}
 import graft.kernel.Raster._
 
@@ -45,15 +45,15 @@ class KernelSpec extends SparkSuite {
 
   test("deflate tiling round-trips and pads edge tiles with nodata") {
     val wide = Grid(300, 270, Array.tabulate(300 * 270)(_.toFloat), Some(-1f))
-    val tiles = Cogify.tile(wide)
+    val tiles = Tiff.tile(wide)
     assert(tiles.size == 4) // 2x2 tiles of 256
     val t00 = tiles.find(t => t.tileCol == 0 && t.tileRow == 0).get
-    val bytes = Cogify.inflate(t00.deflated, 256 * 256 * 4)
+    val bytes = Tiff.inflate(t00.deflated, 256 * 256 * 4)
     val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     assert(bb.getFloat(0) == 0f)
     assert(bb.getFloat((1 * 256 + 1) * 4) == 301f) // row 1, col 1
     val t11 = tiles.find(t => t.tileCol == 1 && t.tileRow == 1).get
-    val b11 = java.nio.ByteBuffer.wrap(Cogify.inflate(t11.deflated, 256 * 256 * 4))
+    val b11 = java.nio.ByteBuffer.wrap(Tiff.inflate(t11.deflated, 256 * 256 * 4))
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     // beyond grid edge -> nodata pad
     assert(b11.getFloat((255 * 256 + 255) * 4) == -1f)
@@ -70,7 +70,8 @@ class KernelSpec extends SparkSuite {
         transposeFix = true),
       "OMDOAO3e" -> CollectionConfig("ColumnAmountO3", useTopLeftRecipe = true,
         flipudFix = true))
-    val results = Cogify.run(tasks, configs, s"file:$out").collect()
+    val results = Cogify.run(tasks, configs, s"file:$out",
+      mkReader = () => new Cogify.FakeGridReader()).collect()
     assert(results.length == 2 && results.forall(_.error.isEmpty))
     val r = results.find(_.collection == "OMDOAO3e").get
     assert(r.n_tiles == 2 && r.width == 360 && r.height == 180) // 360/256 -> 2x1
@@ -82,7 +83,7 @@ class KernelSpec extends SparkSuite {
 
     // a reader that always throws a non-retryable error -> DLQ row
     class Bad extends Cogify.GridReader {
-      def read(t: CogifyTask, c: CollectionConfig) =
+      def readBands(t: CogifyTask, c: CollectionConfig) =
         throw new IllegalStateException("corrupt granule")
     }
     val dlq = Cogify.run(tasks, configs, s"file:$out", mkReader = () => new Bad)
@@ -100,7 +101,8 @@ class KernelSpec extends SparkSuite {
     planted.foreach { case (k, v) => hc.set(k, v) }
     val results =
       try Cogify.run(Seq(CogifyTask("OMDOAO3e", "s3://b/u.nc", None,
-        upload = false)).toDS(), Map.empty, s"file:$out").collect()
+        upload = false)).toDS(), Map.empty, s"file:$out",
+        mkReader = () => new Cogify.FakeGridReader()).collect()
       finally prior.foreach {
         case (k, Some(v)) => hc.set(k, v)
         case (k, None) => hc.unset(k)
@@ -113,12 +115,11 @@ class KernelSpec extends SparkSuite {
   }
 
   test("cogify output is a spec-layout baseline TIFF that round-trips") {
-    import graft.kernel.Tiff
     // non-tile-aligned dims exercise edge padding; non-global extent
     // exercises the geo tags
     val wide = Grid(300, 270, Array.tabulate(300 * 270)(i => (i % 997).toFloat), Some(-1f))
     val affine = Raster.topLeftRecipe(Extent(10, 40, 40, 67), 300, 270)
-    val bytes = Tiff.write(wide, affine, Cogify.tile(wide))
+    val bytes = Tiff.writeCog(Seq(wide), affine)
 
     // 1. tag layout: the fields an external reader needs, correct values
     val tags = Tiff.parse(bytes)
@@ -153,7 +154,7 @@ class KernelSpec extends SparkSuite {
     import spark.implicits._
     val out = tempDir("tif").getAbsolutePath
     Cogify.run(Seq(CogifyTask("X", "s3://b/c.nc", None, upload = false)).toDS(),
-      Map.empty, s"file:$out").collect()
+      Map.empty, s"file:$out", mkReader = () => new Cogify.FakeGridReader()).collect()
     val fileBytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$out/X/c.nc.cog.tif"))
     val t2 = Tiff.parse(fileBytes)
@@ -162,11 +163,10 @@ class KernelSpec extends SparkSuite {
   }
 
   test("cog write: IFD-first overview pyramid, decimated pages decode") {
-    import graft.kernel.Tiff
     // 600x540 -> overviews 300x270, 150x135 (fits one tile -> stop)
     val g = Grid(600, 540, Array.tabulate(600 * 540)(i => (i % 1013).toFloat), Some(-1f))
     val affine = Raster.topLeftRecipe(Extent(0, 0, 60, 54), 600, 540)
-    val bytes = Tiff.writeCog(g, affine, Cogify.tile(g))
+    val bytes = Tiff.writeCog(Seq(g), affine)
 
     val pages = Tiff.parseAll(bytes)
     assert(pages.size == 3)
@@ -190,7 +190,7 @@ class KernelSpec extends SparkSuite {
     val (tw, th) = (256, 256)
     val off = ovTags(Tiff.TagTileOffsets).longs.head.toInt
     val len = ovTags(Tiff.TagTileByteCounts).longs.head.toInt
-    val raw = Cogify.inflate(java.util.Arrays.copyOfRange(bytes, off, off + len), tw * th * 4)
+    val raw = Tiff.inflate(java.util.Arrays.copyOfRange(bytes, off, off + len), tw * th * 4)
     val tb = java.nio.ByteBuffer.wrap(raw).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     // ov2(r, c) == g(4r, 4c) for nearest 2x twice
     for (r <- Seq(0, 7, 134); c <- Seq(0, 11, 149))
@@ -209,12 +209,11 @@ class KernelSpec extends SparkSuite {
   }
 
   test("multi-band cog: planar tile runs, lockstep overviews, exact round-trip") {
-    import graft.kernel.Tiff
     val w = 520; val h = 300
     val bands = (0 until 3).map(b =>
       Grid(w, h, Array.tabulate(w * h)(i => (i % 977 + b * 10000).toFloat), Some(-9f)))
     val affine = Raster.topLeftRecipe(Extent(0, 0, 52, 30), w, h)
-    val bytes = Tiff.writeCogBands(bands, affine)
+    val bytes = Tiff.writeCog(bands, affine)
 
     val pages = Tiff.parseAll(bytes)
     assert(pages.size == 3) // 520x300 -> 260x150 -> 130x75 (≤256 -> stop)
@@ -239,12 +238,11 @@ class KernelSpec extends SparkSuite {
   }
 
   test("rotated affine rides ModelTransformation and round-trips, overviews scale all linear terms") {
-    import graft.kernel.Tiff
     val w = 300; val h = 280
     val g = Grid(w, h, Array.tabulate(w * h)(i => (i % 613).toFloat), Some(-1f))
     // a genuinely rotated geotransform (b/d nonzero)
     val affine = Affine(0.05, 0.013, -30.0, -0.011, -0.04, 48.0)
-    val bytes = Tiff.writeCog(g, affine, Cogify.tile(g))
+    val bytes = Tiff.writeCog(Seq(g), affine)
 
     val pages = Tiff.parseAll(bytes)
     val p0 = pages.head
@@ -264,25 +262,23 @@ class KernelSpec extends SparkSuite {
     // overview pages carry no geo tags (page-0 convention), so assert
     // via a direct half-resolution write
     val half = Tiff.readGrid(Tiff.writeCog(
-      Grid(2, 2, Array(1f, 2f, 3f, 4f), None),
-      Affine(0.1, 0.02, 5.0, -0.03, -0.2, 9.0),
-      Cogify.tile(Grid(2, 2, Array(1f, 2f, 3f, 4f), None))))._2
+      Seq(Grid(2, 2, Array(1f, 2f, 3f, 4f), None)),
+      Affine(0.1, 0.02, 5.0, -0.03, -0.2, 9.0)))._2
     assert(half == Affine(0.1, 0.02, 5.0, -0.03, -0.2, 9.0))
 
     // axis-aligned files keep the classic PixelScale+Tiepoint pair
-    val aligned = Tiff.parseAll(Tiff.writeCog(g,
-      Raster.topLeftRecipe(Extent(0, 0, 30, 28), w, h), Cogify.tile(g))).head
+    val aligned = Tiff.parseAll(Tiff.writeCog(Seq(g),
+      Raster.topLeftRecipe(Extent(0, 0, 30, 28), w, h))).head
     assert(aligned.contains(Tiff.TagModelPixelScale) &&
       !aligned.contains(Tiff.TagModelTransformation))
   }
 
   test("rotated multi-band cog round-trips exactly") {
-    import graft.kernel.Tiff
     val w = 300; val h = 270
     val bands = (0 until 2).map(b =>
       Grid(w, h, Array.tabulate(w * h)(i => (i % 541 + b * 5000).toFloat), Some(-2f)))
     val affine = Affine(0.02, -0.004, 10.0, 0.003, -0.025, 55.0)
-    val bytes = Tiff.writeCogBands(bands, affine)
+    val bytes = Tiff.writeCog(bands, affine)
     val (back, affBack) = Tiff.readBands(bytes)
     assert(affBack == affine && back.size == 2)
     back.zip(bands).foreach { case (o, i) =>
@@ -291,12 +287,11 @@ class KernelSpec extends SparkSuite {
   }
 
   test("bigtiff: version-43 container round-trips, classic parser rejects it") {
-    import graft.kernel.Tiff
     val w = 600; val h = 540
     val bands = (0 until 2).map(b =>
       Grid(w, h, Array.tabulate(w * h)(i => (i % 1013 + b * 5000).toFloat), None))
     val affine = Raster.topLeftRecipe(Extent(0, 0, 60, 54), w, h)
-    val bytes = Tiff.writeCogBands(bands, affine, forceBigTiff = true)
+    val bytes = Tiff.writeCog(bands, affine, forceBigTiff = true)
 
     // header: II + magic 43 + offset-size 8 + pad 0
     assert(bytes(0) == 'I'.toByte && bytes(1) == 'I'.toByte)
@@ -313,12 +308,11 @@ class KernelSpec extends SparkSuite {
     assert(affBack == affine && back.size == 2)
     back.zip(bands).foreach { case (o, i) => assert(o.data.toSeq == i.data.toSeq) }
     // same pages, same content as the classic container
-    val classic = Tiff.readBands(Tiff.writeCogBands(bands, affine))
+    val classic = Tiff.readBands(Tiff.writeCog(bands, affine))
     assert(classic._1.map(_.data.toSeq) == back.map(_.data.toSeq))
   }
 
   test("randomized: COG write/read round-trips 25 seeded grids exactly") {
-    import graft.kernel.Tiff
     val rnd = new scala.util.Random(0xC06L)
     for (_ <- 1 to 25) {
       val w = 1 + rnd.nextInt(600)
@@ -328,11 +322,76 @@ class KernelSpec extends SparkSuite {
       val affine = Raster.topLeftRecipe(
         Extent(-50 + rnd.nextInt(40), -30 + rnd.nextInt(20),
           60 + rnd.nextInt(40), 40 + rnd.nextInt(20)), w, h)
-      val (back, affBack) = Tiff.readGrid(Tiff.writeCog(g, affine, Cogify.tile(g)))
+      val (back, affBack) = Tiff.readGrid(Tiff.writeCog(Seq(g), affine))
       assert(back.width == w && back.height == h, s"dims $w x $h")
       assert(back.data.toSeq == g.data.toSeq, s"data mismatch at $w x $h")
       assert(affBack == affine && back.nodata == nodata)
     }
+  }
+
+  test("golden COG bytes: every cogify recipe and writer case is byte-pinned") {
+    import spark.implicits._
+    import graft.kernel.Netcdf
+    import graft.sources.Fetch
+    import NetcdfSpec.{BAtt, BDim, BVar, build}
+    def sha(bytes: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+        .map(b => f"$b%02x").mkString
+    // 520x270: two overview levels, padded edge tiles, scattered fill pixels
+    val (w, h) = (520, 270)
+    def field(k: Int): Seq[Double] = Seq.tabulate(w * h)(i =>
+      if (i % 1009 == 0) -9999.0 else ((i * k) % 4093) / 8.0)
+    val nc = build(version = 1, numRecs = 0,
+      dims = Seq(BDim("lat", h), BDim("lon", w)), gatts = Seq.empty,
+      vars = Seq(
+        BVar("lat", Seq(0), Seq.empty, Netcdf.NcDouble, Seq.tabulate(h)(r => 20.0 + 0.1 * r)),
+        BVar("lon", Seq(1), Seq.empty, Netcdf.NcDouble, Seq.tabulate(w)(c => -40.0 + 0.1 * c)),
+        BVar("sst", Seq(0, 1), Seq(BAtt("_FillValue", Netcdf.NcFloat, Seq(-9999.0))),
+          Netcdf.NcFloat, field(7)),
+        BVar("sst_err", Seq(0, 1), Seq.empty, Netcdf.NcFloat, field(13))))
+    val src = tempDir("golden")
+    val granule = new java.io.File(src, "granule.nc")
+    java.nio.file.Files.write(granule.toPath, nc)
+    val out = tempDir("goldencog").getAbsolutePath
+    val fetch = () => new Cogify.FetchGridReader(() => new Fetch.RoutingFetcher())
+    def cogify(collection: String, href: String, config: CollectionConfig,
+        mkReader: () => Cogify.GridReader): Array[Byte] = {
+      val r = Cogify.run(Seq(CogifyTask(collection, href, None, upload = false)).toDS(),
+        Map(collection -> config), s"file:$out", mkReader = mkReader).collect().head
+      assert(r.error.isEmpty, r)
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(r.filename.stripPrefix("file:")))
+    }
+    val coords = CollectionConfig("sst", xVariable = Some("lon"), yVariable = Some("lat"))
+    val topLeft = cogify("TL", granule.getPath, coords.copy(useTopLeftRecipe = true), fetch)
+    val tiffSrc = new java.io.File(src, "granule.tif")
+    java.nio.file.Files.write(tiffSrc.toPath, topLeft)
+
+    val rotated = Grid(300, 280, Array.tabulate(300 * 280)(i => (i % 613).toFloat), Some(-1f))
+    val rotAffine = Affine(0.05, 0.013, -30.0, -0.011, -0.04, 48.0)
+    val bigBands = (0 until 2).map(b =>
+      Grid(600, 540, Array.tabulate(600 * 540)(i => (i % 1013 + b * 5000).toFloat), None))
+    val got = Map(
+      "topleft" -> topLeft,
+      "mercator" -> cogify("WM", granule.getPath, coords.copy(flipudFix = true), fetch),
+      "fake" -> cogify("FK", "s3://b/golden.nc", CollectionConfig("data"),
+        () => new Cogify.FakeGridReader()),
+      "bands" -> cogify("MB", granule.getPath, coords.copy(useTopLeftRecipe = true,
+        bandVariables = Seq("sst", "sst_err")), fetch),
+      "tiff" -> cogify("TF", tiffSrc.getPath,
+        CollectionConfig("data", useTopLeftRecipe = true), fetch),
+      "rotated" -> Tiff.writeCog(Seq(rotated), rotAffine),
+      "bigtiff" -> Tiff.writeCog(bigBands,
+        Raster.topLeftRecipe(Extent(0, 0, 60, 54), 600, 540), forceBigTiff = true))
+      .map { case (k, v) => k -> sha(v) }
+    val pinned = Map(
+      "bands" -> "9f3094deb82ce9fd3ac5e4f5c2929d4592ca4d4407c07156d7fd12899372a583",
+      "bigtiff" -> "6a2ff45fc9ce50b8a64ba08674acc41aa7875a81bb890234d94332bf02a44579",
+      "fake" -> "f1e6d46a50610934c73d99ff171961c7ee03c05162b86ee486ed36b958e2347c",
+      "mercator" -> "869b28c464ef1bc313da6ee2e564f83050210532f8eb9c6f9986176b4d338146",
+      "rotated" -> "e6e5a2bed354cf2582483521fbcb76dfd37c6ca89bc348d220eceb3361a562ce",
+      "tiff" -> "036f9a2d07cf44166581c23e3bb5a1f61c9c6caa3cf0cb51e955442de084c07d",
+      "topleft" -> "ff7477c2c67bd57b95b5bc50f33b3bf92a952c0ab4262f66be45c24e9d3f10d1")
+    assert(got == pinned, got.toSeq.sorted.mkString("\n", "\n", ""))
   }
 
   test("band stats aggregator matches exact stats under repartitioning") {

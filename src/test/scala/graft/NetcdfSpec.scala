@@ -174,7 +174,7 @@ class NetcdfSpec extends SparkSuite {
       Map("MB" -> CollectionConfig("a", bandVariables = Seq("a", "b"))),
       s"file:${tempDir("mbout").getAbsolutePath}",
       mkReader = () => new Cogify.FakeGridReader()).collect()
-    assert(results.head.error.exists(_.contains("one variable per")))
+    assert(results.head.error.exists(_.contains("decoded 1 band(s); config names 2")))
   }
 
   test("randomized: 30 seeded spec-grammar files parse back exactly") {

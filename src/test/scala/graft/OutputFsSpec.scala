@@ -83,7 +83,8 @@ class OutputFsSpec extends SparkSuite {
           s"file:${base.resolve("spill")}", threshold = 64))
         .select("k", "item_json", "resolved_item").as[(Int, String, String)]
         .collect().toSeq
-      cogErrors = Cogify.run(tasks, Map.empty, s"file:${base.resolve("cog")}")
+      cogErrors = Cogify.run(tasks, Map.empty, s"file:${base.resolve("cog")}",
+          mkReader = () => new Cogify.FakeGridReader())
         .collect().toSeq.flatMap(_.error)
       WdsShards.writeShardFiles(shards, s"file:${base.resolve("wds")}")
       Transfer.execute(events, s"file:${base.resolve("target")}")
